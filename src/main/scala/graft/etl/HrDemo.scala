@@ -37,12 +37,13 @@ object HrDemo {
       HrPipeline.readCsv(spark, rawDir, "projects"),
       HrPipeline.readCsv(spark, rawDir, "project_assignments"), asOf)
 
-    HrPipeline.writeCsv(out, s"$outDir/csv")
-    HrPipeline.writeParquet(out, s"$outDir/parquet")
-
-    println(HrValidate.dqStats(out.dqChecks).collect()(0))
-    val report = HrReport.summaryReport(spark, out.summaryDeptMetrics,
-      out.summaryEmpPerformance, out.projectWorkload)
+    val report = try {
+      HrPipeline.writeCsv(out, s"$outDir/csv")
+      HrPipeline.writeParquet(out, s"$outDir/parquet")
+      println(HrValidate.dqStats(out.dqChecks).collect()(0))
+      HrReport.summaryReport(spark, out.summaryDeptMetrics,
+        out.summaryEmpPerformance, out.projectWorkload)
+    } finally out.unpersist()
     println(report)
     // the reference writes the report as a text file too
     // (reference reporting.py:13,120-121)

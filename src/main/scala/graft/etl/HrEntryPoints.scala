@@ -54,6 +54,10 @@ object HrTransformDemo {
     * it on an existing session. */
   def run(spark: SparkSession, stagedDir: String, asOf: Date): String = {
     val out = HrEntryPoints.readAll(spark, stagedDir, asOf)
+    try preview(out) finally out.unpersist()
+  }
+
+  private def preview(out: HrPipeline.Outputs): String = {
     val sb = new StringBuilder
     val stats = HrValidate.dqStats(out.dqChecks).collect()(0)
     sb ++= s"validation: ${stats.getAs[Long]("passed")} passed, " +
@@ -101,21 +105,17 @@ object HrLoadDemo {
           jdbcUrl: Option[String] = None,
           jdbcOptions: Map[String, String] = Map.empty): Unit = {
     val out = HrEntryPoints.readAll(spark, stagedDir, asOf)
-    // processed-zone export (reference load.py:146-153) — the same six
-    // aligned tables the JDBC load ships
-    HrPipeline.writeCsv(out, s"$outDir/processed")
-    jdbcUrl.foreach { url =>
-      Seq("dim_departments" -> out.dimDepartments,
-        "dim_employees" -> out.dimEmployees,
-        "fact_performance_reviews" -> out.factReviews,
-        "fact_project_assignments" -> out.factAssignments,
-        "summary_dept_metrics" -> out.summaryDeptMetrics,
-        "summary_emp_performance" -> out.summaryEmpPerformance)
-        .foreach { case (name, df) =>
+    try {
+      // processed-zone export (reference load.py:146-153) — the same six
+      // aligned tables the JDBC load ships
+      HrPipeline.writeCsv(out, s"$outDir/processed")
+      jdbcUrl.foreach { url =>
+        HrPipeline.tables(out).foreach { case (name, df) =>
           HrPipeline.writeJdbcTable(df, name, url, jdbcOptions)
         }
-      HrPipeline.createIndexes(url, jdbcOptions)
-    }
+        HrPipeline.createIndexes(url, jdbcOptions)
+      }
+    } finally out.unpersist()
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,12 +1,24 @@
 package graft.etl
 
 import java.sql.Date
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+
+import graft.Par
+import graft.operators.ConnectedComponents
 
 /** End-to-end orchestration of the reference pipeline
   * (reference main.py:184-222): extract -> transform -> validate -> load ->
-  * report, as one lazy DAG with actions only at sinks and check counts.
+  * report. [[build]] computes each cleaned table and summary mart once and
+  * keeps it in memory, so the DQ checks, every sink and the report read
+  * those blocks instead of re-reading and re-cleaning the CSVs. Sinks and
+  * report queries over independent tables run concurrently through
+  * [[graft.Par.map]], one thread per core; the JDBC load stays sequential
+  * ([[writeJdbc]]).
   *
   * Sinks mirror the reference's (SURVEY.md §2.1): CSV with yyyy-MM-dd
   * dates (S4), parquet for the harness, and a truncate-mode JDBC writer
@@ -15,11 +27,22 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object HrPipeline {
 
+  /** The star schema, the summary marts and the DQ check rows. The tables
+    * are materialised: call [[unpersist]] once the last sink or report has
+    * read them. */
   case class Outputs(dimDepartments: DataFrame, dimEmployees: DataFrame,
                      factReviews: DataFrame, factAssignments: DataFrame,
                      summaryDeptMetrics: DataFrame,
                      summaryEmpPerformance: DataFrame,
-                     projectWorkload: DataFrame, dqChecks: DataFrame)
+                     projectWorkload: DataFrame, dqChecks: DataFrame)(
+                     persisted: Seq[RDD[Row]]) {
+    /** Frees the blocks of every materialised table. */
+    def unpersist(): Unit = persisted.foreach(_.unpersist())
+  }
+
+  /** Threads for fanning out independent tables: one per core. */
+  private def width(spark: SparkSession): Int =
+    spark.sparkContext.defaultParallelism
 
   /** Extract stage (reference extract.py): schema-full CSV scans. */
   def readCsv(spark: SparkSession, dir: String, table: String): DataFrame =
@@ -48,56 +71,67 @@ object HrPipeline {
     // use — java.io.File would be always-false on an HDFS/S3/abfs raw dir,
     // silently staging nothing instead of staging the files there
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    HrSchemas.all.keys.toSeq.sorted.filter { t =>
+    val tables = HrSchemas.all.keys.toSeq.sorted
+    val present = Par.map(tables, width(spark)) { t =>
       val p = new org.apache.hadoop.fs.Path(s"$rawDir/$t.csv")
-      val present = p.getFileSystem(hadoopConf).exists(p)
-      if (present)
+      val exists = p.getFileSystem(hadoopConf).exists(p)
+      if (exists)
         readCsv(spark, rawDir, t).write.mode(SaveMode.Overwrite)
           .option("header", "true")
           .option("dateFormat", "yyyy-MM-dd")
           .csv(s"$stagingDir/$t.csv")
-      present
+      exists
+    }
+    tables.zip(present).collect { case (t, true) => t }
+  }
+
+  /** Transform + validate (reference main.py:59-148). Each of the five
+    * cleaned tables and the three summary marts is materialised
+    * ([[graft.operators.ConnectedComponents.materialize]]): computed once
+    * and kept in memory (spilling to disk), with its lineage kept for
+    * recomputing lost partitions. The marts are built from the
+    * materialised tables, and the DQ suite runs on them as
+    * [[HrValidate.validateAllSinglePass]]: one action per validated table.
+    * Independent tables are materialised concurrently. The returned frames
+    * all scan those blocks; none re-reads the inputs. If build throws, it
+    * frees what it had persisted. */
+  def build(spark: SparkSession, employees: DataFrame, departments: DataFrame,
+            reviews: DataFrame, projects: DataFrame, assignments: DataFrame,
+            asOf: Date): Outputs = {
+    val persisted = new ConcurrentLinkedQueue[RDD[Row]]()
+    def once(dfs: DataFrame*): Seq[DataFrame] =
+      Par.map(dfs, width(spark)) { df =>
+        val (m, rdd) = ConnectedComponents.materialize(df)
+        persisted.add(rdd)
+        m
+      }
+    try {
+      val Seq(dimDepartments, dimEmployees, factReviews, cleanProjects,
+          factAssignments) = once(
+        HrTransform.normalizeDepartments(departments),
+        HrTransform.cleanEmployees(employees, asOf),
+        HrTransform.cleanReviews(reviews),
+        HrTransform.cleanProjects(projects, asOf),
+        HrTransform.cleanAssignments(assignments))
+      val Seq(summaryDept, summaryEmp, workload) = once(
+        HrAggregates.deptSummary(
+          dimDepartments, dimEmployees, cleanProjects, asOf),
+        HrAggregates.empPerformance(dimEmployees, factReviews, dimDepartments),
+        HrAggregates.projectWorkload(cleanProjects, factAssignments))
+
+      val checks = HrValidate.validateAllSinglePass(spark, dimEmployees,
+        dimDepartments, factReviews, cleanProjects, factAssignments)
+
+      Outputs(dimDepartments, dimEmployees, factReviews, factAssignments,
+        summaryDept, summaryEmp, workload, checks)(persisted.asScala.toSeq)
+    } catch {
+      case e: Throwable =>
+        persisted.forEach(_.unpersist())
+        throw e
     }
   }
 
-  /** Transform + validate (reference main.py:59-148), pure lineage.
-    *
-    * @param singlePassDq false (default) keeps the reference's eager
-    *        one-action-per-check validation; true folds each table's
-    *        checks into a single action ([[HrValidate.validateAllSinglePass]],
-    *        4 jobs instead of ~13 — the right setting when the inputs are
-    *        big enough that each extra pass is a real scan) */
-  def build(spark: SparkSession, employees: DataFrame, departments: DataFrame,
-            reviews: DataFrame, projects: DataFrame, assignments: DataFrame,
-            asOf: Date, singlePassDq: Boolean = false): Outputs = {
-    val dimDepartments = HrTransform.normalizeDepartments(departments)
-    val dimEmployees = HrTransform.cleanEmployees(employees, asOf)
-    val factReviews = HrTransform.cleanReviews(reviews)
-    val cleanProjects = HrTransform.cleanProjects(projects, asOf)
-    val factAssignments = HrTransform.cleanAssignments(assignments)
-
-    val summaryDept = HrAggregates.deptSummary(
-      dimDepartments, dimEmployees, cleanProjects, asOf)
-    val summaryEmp = HrAggregates.empPerformance(
-      dimEmployees, factReviews, dimDepartments)
-    val workload = HrAggregates.projectWorkload(cleanProjects, factAssignments)
-
-    val checks =
-      if (singlePassDq)
-        HrValidate.validateAllSinglePass(spark, dimEmployees, dimDepartments,
-          factReviews, cleanProjects, factAssignments)
-      else
-        HrValidate.validateEmployees(spark, dimEmployees, dimDepartments)
-          .union(HrValidate.validateReviews(spark, factReviews, dimEmployees))
-          .union(HrValidate.validateAssignments(spark, factAssignments,
-            cleanProjects, dimEmployees))
-          .union(HrValidate.validateProjects(spark, cleanProjects))
-
-    Outputs(dimDepartments, dimEmployees, factReviews, factAssignments,
-      summaryDept, summaryEmp, workload, checks)
-  }
-
-  private def tables(out: Outputs): Seq[(String, DataFrame)] = Seq(
+  private[etl] def tables(out: Outputs): Seq[(String, DataFrame)] = Seq(
     "dim_departments" -> out.dimDepartments,
     "dim_employees" -> out.dimEmployees,
     "fact_performance_reviews" -> out.factReviews,
@@ -107,11 +141,12 @@ object HrPipeline {
 
   /** CSV sink (reference load.py:67-82): header + yyyy-MM-dd dates. */
   def writeCsv(out: Outputs, dir: String): Unit =
-    tables(out).foreach { case (name, df) =>
-      df.write.mode(SaveMode.Overwrite)
-        .option("header", "true")
-        .option("dateFormat", "yyyy-MM-dd")
-        .csv(s"$dir/$name")
+    Par.map(tables(out), width(out.dimEmployees.sparkSession)) {
+      case (name, df) =>
+        df.write.mode(SaveMode.Overwrite)
+          .option("header", "true")
+          .option("dateFormat", "yyyy-MM-dd")
+          .csv(s"$dir/$name")
     }
 
   /** Parquet sink for the verification harness. Each table carries an
@@ -119,9 +154,10 @@ object HrPipeline {
     * job itself accumulates — readable via [[graft.operators.Metrics]]
     * with no second scan. */
   def writeParquet(out: Outputs, dir: String): Unit =
-    tables(out).foreach { case (name, df) =>
-      graft.operators.Metrics.observeVolume(df, s"sink_$name")
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
+    Par.map(tables(out), width(out.dimEmployees.sparkSession)) {
+      case (name, df) =>
+        graft.operators.Metrics.observeVolume(df, s"sink_$name")
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
     }
 
   /** JDBC truncate-then-insert sink for one table (reference
@@ -141,7 +177,9 @@ object HrPipeline {
     w.mode(SaveMode.Overwrite).save()
   }
 
-  /** Load the whole star schema over JDBC (reference main.py:162-166). */
+  /** Load the whole star schema over JDBC (reference main.py:162-166), one
+    * table at a time: each table's write opens a connection per partition,
+    * so a sequential load holds at most nproc connections. */
   def writeJdbc(out: Outputs, url: String, user: String, password: String,
                 sessionInit: Option[String] = Some("SET FOREIGN_KEY_CHECKS=0"))
       : Unit =

@@ -120,8 +120,8 @@ object HrValidate {
         col("budget").isNull || col("budget") > 0, "budget_null_or_positive"))
 
   /** Single-pass variant of one table's whole check set: the eager API
-    * above mirrors the reference's one-action-per-check shape (~13 jobs
-    * over 5 tables during a build); this computes every check for a table
+    * above mirrors the reference's one-action-per-check shape (12 actions
+    * over the 4 validated tables); this computes every check for a table
     * in ONE action — all completeness and accuracy aggregates ride a
     * single `agg`, and each FK check folds in as a left join against the
     * parent's DISTINCT keys (distinct, so child rows never multiply;
@@ -178,35 +178,38 @@ object HrValidate {
     (completeness ++ fkRows ++ accRows).reduce(_ union _)
   }
 
-  /** The whole build-time DQ suite (validateEmployees/Reviews/Assignments/
-    * Projects) in four actions total — one per validated table — with
-    * check rows identical to the eager path. */
+  /** The DQ suite [[HrPipeline.build]] runs (validateEmployees/Reviews/
+    * Assignments/Projects) in four actions total — one per validated
+    * table, run concurrently ([[graft.Par.map]]) — with check rows and
+    * their order identical to the eager path. */
   def validateAllSinglePass(spark: SparkSession, employees: DataFrame,
                             departments: DataFrame, reviews: DataFrame,
                             projects: DataFrame, assignments: DataFrame)
       : DataFrame =
-    singlePassChecks(spark, employees, "employees", Some("employee_id"),
-      Seq("name", "salary", "hire_date"),
-      Seq(("department_id", departments, "department_id")),
-      Seq(
-        (col("status").isin("active", "inactive", "terminated", "leave"),
-          "status_enum"),
-        (!coalesce(col("status") === "active" && col("salary") <= 0,
-          lit(false)), "active_salary_positive")))
-      .union(singlePassChecks(spark, reviews, "performance_reviews",
+    graft.Par.map(Seq[() => DataFrame](
+      () => singlePassChecks(spark, employees, "employees", Some("employee_id"),
+        Seq("name", "salary", "hire_date"),
+        Seq(("department_id", departments, "department_id")),
+        Seq(
+          (col("status").isin("active", "inactive", "terminated", "leave"),
+            "status_enum"),
+          (!coalesce(col("status") === "active" && col("salary") <= 0,
+            lit(false)), "active_salary_positive"))),
+      () => singlePassChecks(spark, reviews, "performance_reviews",
         Some("review_id"), Seq("employee_id", "rating", "review_date"),
         Seq(("employee_id", employees, "employee_id")),
-        Seq((col("rating").between(1.0, 5.0), "rating_range"))))
-      .union(singlePassChecks(spark, assignments, "project_assignments",
+        Seq((col("rating").between(1.0, 5.0), "rating_range"))),
+      () => singlePassChecks(spark, assignments, "project_assignments",
         None, Nil,
         Seq(("project_id", projects, "project_id"),
           ("employee_id", employees, "employee_id")),
         Seq((col("allocation_percentage").between(0, 100),
-          "allocation_range"))))
-      .union(singlePassChecks(spark, projects, "projects",
+          "allocation_range"))),
+      () => singlePassChecks(spark, projects, "projects",
         Some("project_id"), Seq("project_name", "start_date"), Nil,
         Seq((col("budget").isNull || col("budget") > 0,
-          "budget_null_or_positive"))))
+          "budget_null_or_positive")))),
+      spark.sparkContext.defaultParallelism)(_()).reduce(_ union _)
 
   /** reference main.py:135-140: aggregate pass/fail stats over a unioned
     * check DataFrame. */

@@ -44,8 +44,9 @@ object ConnectedComponents {
     *  - unlike `localCheckpoint`, RDD lineage is retained, so losing an
     *    executor recomputes the lost partitions instead of failing the
     *    job, and the handle lets us `unpersist` superseded rounds.
+    * Also the HR pipeline's materialise-once step ([[graft.etl.HrPipeline.build]]).
     */
-  private def materialize(df: DataFrame): (DataFrame, RDD[Row]) = {
+  private[graft] def materialize(df: DataFrame): (DataFrame, RDD[Row]) = {
     val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }

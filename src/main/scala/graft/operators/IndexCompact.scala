@@ -67,8 +67,9 @@ object IndexCompact {
     // per op (a blocking materialization, then a count over the
     // blocks) purely so the count would see exactly the written rows —
     // observe() reports exactly the rows that flowed into the write,
-    // by construction, with zero extra passes (WriteMetricsSpec pins
-    // the value against a read-back count)
+    // by construction, with zero extra passes (IndexCompactSpec, and
+    // IndexLifecycleSpec for compactPartitioned, pin the value against a
+    // read-back count)
     val obs = new org.apache.spark.sql.Observation()
     val fresh = admits
       .select(target.columns.map(org.apache.spark.sql.functions.col): _*)

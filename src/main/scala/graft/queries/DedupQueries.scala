@@ -42,48 +42,6 @@ object DedupQueries {
     * substring/winnow-family inverted index, chosen because its keys
     * naturally span documents (deletions force real owner
     * re-elections; the corpus has zero full-text duplicates). */
-  /** Run two INDEPENDENT maintenance steps concurrently — distinct
-    * store roots only (no data/version dependency): Spark happily runs
-    * both jobs at once and the second back-fills executors the first's
-    * tail frees (r19; the optimization guide's overlap-independent-jobs
-    * device). Session-conf safety: [[graft.sources.SnapshotStore]]'s
-    * writeData scopes its parquet-writer conf through a
-    * reference-counted save/restore, so concurrent writers cannot leave
-    * the session flipped (the naive pair raced exactly here and leaked
-    * TIMESTAMP_MICROS into every later write of the session).
-    *
-    * FAILURE SEMANTICS (r20, the r19 verdict's finding #4): a failing
-    * arm surfaces its ORIGINAL exception — the pool's
-    * ExecutionException wrapper is unwrapped, so a
-    * [[graft.sources.SnapshotStore.ConcurrentCommitException]] thrown
-    * inside a parallel txn step keeps its type for the store's
-    * documented retry-on-ConcurrentCommit doctrine (InParallelSpec pins
-    * it) — and the SIBLING future is cancelled with interrupt instead
-    * of being left running fire-and-forget (best-effort: the interrupt
-    * aborts the sibling's driver thread between/inside its blocking
-    * Spark actions; pool teardown is shutdownNow so the throw never
-    * strands a thread). */
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val f1 = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = fa })
-      val f2 = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = fb })
-      def await[T](f: java.util.concurrent.Future[T],
-          sibling: java.util.concurrent.Future[_]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            sibling.cancel(true)
-            throw Option(e.getCause).getOrElse(e)
-        }
-      val a = await(f1, f2)
-      val b = await(f2, f1)
-      (a, b)
-    } finally { pool.shutdownNow(); () }
-  }
-
   private def gramPostings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.table(s, dir, "documents")
@@ -1075,15 +1033,16 @@ object DedupQueries {
         .saveAsTable("gram_idx_lifecycle_q")
       // the admit compact (idx table) and the tombstone staging (tomb
       // table) touch DIFFERENT tables with no dependency — overlap them
-      // (the txn query's inParallel discipline); fold then consumes both
-      inParallel(
-        graft.operators.IndexCompact.compactPartitioned(
+      // (the txn query's discipline); fold then consumes both
+      graft.Par.map(Seq[() => Any](
+        () => graft.operators.IndexCompact.compactPartitioned(
           s, "gram_idx_lifecycle_q",
           postings.filter($"doc_id" % 3 =!= 0).select($"g", $"doc_id", $"pt"),
           Seq("g", "doc_id"), "pt"),
-        graft.operators.IndexRetract.tombstone(
+        () => graft.operators.IndexRetract.tombstone(
           s, "gram_tomb_lifecycle_q",
-          postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)))
+          postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0))),
+        2)(_())
       graft.operators.IndexRetract.fold(
         s, "gram_idx_lifecycle_q", "gram_tomb_lifecycle_q",
         "pt", Seq("g", "doc_id"))
@@ -1501,23 +1460,23 @@ object DedupQueries {
       // overlap-independent-jobs discipline; Spark schedules concurrent
       // jobs FIFO, which is exactly back-fill). The group protocol is
       // untouched: both commits still land inside ONE transact claim.
-      inParallel(
-        graft.sources.SnapshotStore.init(s, aRoot,
+      graft.Par.map(Seq[() => Any](
+        () => graft.sources.SnapshotStore.init(s, aRoot,
           postings.filter($"doc_id" % 3 === 1)
             .select($"g", $"doc_id", $"pt"), "pt"),
-        graft.sources.SnapshotStore.init(s, bRoot,
-          bands.filter($"doc_id" % 3 === 1), "pt"))
+        () => graft.sources.SnapshotStore.init(s, bRoot,
+          bands.filter($"doc_id" % 3 === 1), "pt")), 2)(_())
       graft.sources.SnapshotGroup.init(s, gRoot,
         Map("postings" -> aRoot, "bands" -> bRoot))
       graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
-        inParallel(
-          txn.compact("postings",
+        graft.Par.map(Seq[() => Any](
+          () => txn.compact("postings",
             postings.filter($"doc_id" % 3 =!= 0)
               .select($"g", $"doc_id", $"pt"),
             Seq("g", "doc_id"), "pt"),
-          txn.compact("bands",
+          () => txn.compact("bands",
             bands.filter($"doc_id" % 3 =!= 0),
-            Seq("band", "doc_id"), "pt"))
+            Seq("band", "doc_id"), "pt")), 2)(_())
         ()
       }
       val a = graft.sources.SnapshotGroup.read(s, gRoot, "postings")
@@ -1570,17 +1529,17 @@ object DedupQueries {
         Map("postings" -> aRoot))                       // group v1
       // the not-yet-enrolled band store's init is independent of the
       // postings transaction (different roots, no group claim overlap)
-      // — overlap them (the txn query's inParallel discipline); the
-      // group version history v1→v4 is unchanged
-      inParallel(
-        graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
+      // — overlap them (the txn query's discipline); the group version
+      // history v1→v4 is unchanged
+      graft.Par.map(Seq[() => Any](
+        () => graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
           txn.compact("postings",
             postings.filter($"doc_id" % 3 =!= 0)
               .select($"g", $"doc_id", $"pt"),
             Seq("g", "doc_id"), "pt"): Unit
         },                                              // group v2
-        graft.sources.SnapshotStore.init(s, bRoot,
-          bands.filter($"doc_id" % 3 === 1), "pt"))
+        () => graft.sources.SnapshotStore.init(s, bRoot,
+          bands.filter($"doc_id" % 3 === 1), "pt")), 2)(_())
       graft.sources.SnapshotGroup.enroll(s, gRoot,
         "bands", bRoot)                                 // group v3
       graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>

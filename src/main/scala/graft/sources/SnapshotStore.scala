@@ -712,38 +712,17 @@ object SnapshotStore {
     // footer opens are independent ~ms-scale metadata reads; a small
     // pool hides their per-file latency (local fs and object stores
     // alike — the same parallelism a real committer applies)
-    inPool(rels)(statOf).toMap
+    graft.Par.map(rels, IoThreads)(statOf).toMap
   }
 
-  /** Bounded-pool driver-side metadata fan-out — footer reads, staging
-    * renames, segment puts: every per-file constant in the commit path
-    * runs through this instead of a sequential loop, so commit latency
-    * is ~ceil(files/16) round-trips rather than files round-trips (the
-    * difference is decisive on an object store, where each op is a
-    * network PUT/HEAD — the r19 verdict's remaining sequential arm).
-    * Sequential fast path below 2 items (no pool spin-up for the
-    * common one-file commit); [[java.util.concurrent
-    * .ExecutionException]] causes are unwrapped so a callback's failure
-    * type survives the pool (a require's IllegalArgumentException
-    * reaches the caller as itself, not wrapped). */
-  private def inPool[A, B](items: Seq[A], threads: Int = 16)
-      (f: A => B): Seq[B] =
-    if (items.lengthCompare(2) < 0) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(threads, items.size))
-      try
-        items.map(it => pool.submit(
-          new java.util.concurrent.Callable[B] { def call(): B = f(it) }))
-          .map { fut =>
-            try fut.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw Option(e.getCause).getOrElse(e)
-            }
-          }
-      finally pool.shutdown()
-    }
+  /** Width of the driver-side metadata fan-out ([[graft.Par.map]]) —
+    * footer reads, staging renames, segment puts: every per-file constant
+    * in the commit path runs through it instead of a sequential loop, so
+    * commit latency is ~ceil(files/16) round-trips rather than files
+    * round-trips (decisive on an object store, where each op is a network
+    * PUT/HEAD). Par.map returns or throws only after every task stopped,
+    * so a rollback after a failed fan-out sees all the files it wrote. */
+  private val IoThreads = 16
 
   /** Merged (lo, hi) bound strings for one column across a file's row
     * groups, or None when any group's statistics are missing or the
@@ -979,9 +958,9 @@ object SnapshotStore {
     * TIMESTAMP_MICROS (see the call site in [[writeData]]): there is no
     * per-write option for the output timestamp type, only the session
     * conf — and a plain save/set/restore pair RACES under concurrent
-    * writers (the inParallel query device): writer B reads "previous"
-    * AFTER writer A already set the value, so B's restore re-installs
-    * A's setting permanently and every later parquet write in the
+    * writers (commits fanned out by [[graft.Par.map]]): writer B reads
+    * "previous" AFTER writer A already set the value, so B's restore
+    * re-installs A's setting permanently and every later parquet write in the
     * session silently flips type (observed: downstream event-query
     * dumps went timezone-aware and broke the oracle dtype compare).
     * First entrant saves and sets, last leaver restores; sessions are
@@ -1050,13 +1029,14 @@ object SnapshotStore {
       else writer).parquet(staging.toString)))
     // pooled per-directory move (r20): the mkdirs + per-file renames of
     // different partition directories are independent metadata ops, so
-    // they fan out on the [[inPool]] arm instead of one sequential
+    // they fan out through [[graft.Par.map]] instead of one sequential
     // driver loop — O(dirs/16) round-trips per commit, the same pool
     // discipline as footerStats (decisive on an object store where
     // every rename is a remote copy+delete; measurable even on local
     // ChecksumFileSystem where each rename moves a .crc sibling too)
     val sized: Seq[(String, Long)] = timed("rename-loop")(
-      inPool(fs.listStatus(staging).filter(_.isDirectory).toSeq) { d =>
+      graft.Par.map(fs.listStatus(staging).filter(_.isDirectory).toSeq,
+          IoThreads) { d =>
         val dirName = d.getPath.getName // pt=<escaped-v>
         val target = new Path(new Path(rootP, "data"), dirName)
         fs.mkdirs(target)
@@ -1146,13 +1126,13 @@ object SnapshotStore {
     val manifestsDir = new Path(rootP, "_manifests")
     val tag = java.util.UUID.randomUUID().toString.take(12)
     // plan segments sequentially (reuse decisions + deterministic
-    // naming), then fan the new-segment writes out on the [[inPool]]
-    // arm (r20): each write is an independent ~100-byte put — one
-    // sequential loop of up to O(partitions) of them per commit was the
-    // r19 verdict's remaining per-commit driver constant, and on an
-    // object store each is a network PUT. Rollback registration happens
-    // BEFORE the pooled writes so a mid-pool failure still deletes
-    // whichever segment files landed.
+    // naming), then fan the new-segment writes out through
+    // [[graft.Par.map]] (r20): each write is an independent ~100-byte
+    // put — one sequential loop of up to O(partitions) of them per
+    // commit was the r19 verdict's remaining per-commit driver constant,
+    // and on an object store each is a network PUT. Par.map throws only
+    // once every write has stopped, so the rollback deletes each segment
+    // file that landed and none lands after it.
     val planned = byDir.toSeq.sortBy(_._1).map { case (dir, dirFiles) =>
       val reuse = prevSegs.get(dir)
         .filter(_ => prevByDir.get(dir).contains(dirFiles.toSet))
@@ -1174,7 +1154,8 @@ object SnapshotStore {
       new Path(manifestsDir, ref) }
     def rollbackSegs(): Unit = written.foreach(fs.delete(_, false))
     timed("commit-segments")(
-      try inPool(jobs.collect { case (ref, Some(body)) => (ref, body) }) {
+      try graft.Par.map(
+        jobs.collect { case (ref, Some(body)) => (ref, body) }, IoThreads) {
         case (ref, body) => writeSmallFile(fs, new Path(manifestsDir, ref), body)
       } catch { case e: Throwable => rollbackSegs(); throw e })
     val segRefs = jobs.map(_._1)

@@ -200,12 +200,20 @@ class HrEtlSpec extends SparkTestBase {
   }
 
   test("single-pass DQ: identical check rows, one action per validated table") {
-    val cleanProjects = HrTransform.cleanProjects(projects, asOf)
     def key(r: Row) = (r.getString(0), r.getString(1), r.getString(2))
-    // force the eager path (and all its ~13 per-check actions) BEFORE
-    // registering the counting listener
-    val eager = out.dqChecks.collect().map(r => key(r) ->
-      r.getAs[Long]("violations")).toMap
+    def checks(df: DataFrame) =
+      df.collect().map(r => key(r) -> r.getAs[Long]("violations")).toSeq
+    val cleanProjects = HrTransform.cleanProjects(projects, asOf)
+    // the reference's one-action-per-check validators, composed here
+    val perCheck = HrValidate.validateEmployees(spark, out.dimEmployees,
+        out.dimDepartments)
+      .union(HrValidate.validateReviews(spark, out.factReviews,
+        out.dimEmployees))
+      .union(HrValidate.validateAssignments(spark, out.factAssignments,
+        cleanProjects, out.dimEmployees))
+      .union(HrValidate.validateProjects(spark, cleanProjects))
+    // same rows, same order
+    assert(checks(out.dqChecks) === checks(perCheck))
 
     val actions = new java.util.concurrent.atomic.AtomicInteger()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -217,7 +225,7 @@ class HrEtlSpec extends SparkTestBase {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    val sp = HrValidate.validateAllSinglePass(spark, out.dimEmployees,
+    HrValidate.validateAllSinglePass(spark, out.dimEmployees,
       out.dimDepartments, out.factReviews, cleanProjects, out.factAssignments)
     // the 4 aggregations are synchronous; listener events are async — poll,
     // then grace-sleep so a hypothetical 5th event would still be counted
@@ -227,9 +235,108 @@ class HrEtlSpec extends SparkTestBase {
     Thread.sleep(250)
     spark.listenerManager.unregister(l)
     assert(actions.get === 4)
+  }
 
-    val got = sp.collect().map(r => key(r) -> r.getAs[Long]("violations")).toMap
-    assert(got === eager)
+  /** Rows of `df` with their multiplicities. */
+  private def multiset(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).view.mapValues(_.length).toMap
+
+  test("materialised outputs equal the unmaterialised lineage as multisets") {
+    val dims = HrTransform.normalizeDepartments(departments)
+    val emps = HrTransform.cleanEmployees(employees, asOf)
+    val revs = HrTransform.cleanReviews(reviews)
+    val projs = HrTransform.cleanProjects(projects, asOf)
+    val assigns = HrTransform.cleanAssignments(assignments)
+    val lineage = Seq(dims, emps, revs, assigns,
+      HrAggregates.deptSummary(dims, emps, projs, asOf),
+      HrAggregates.empPerformance(emps, revs, dims),
+      HrAggregates.projectWorkload(projs, assigns))
+    val materialised = Seq(out.dimDepartments, out.dimEmployees,
+      out.factReviews, out.factAssignments, out.summaryDeptMetrics,
+      out.summaryEmpPerformance, out.projectWorkload)
+    materialised.zip(lineage).foreach { case (m, l) =>
+      assert(m.schema === l.schema)
+      assert(multiset(m) === multiset(l))
+    }
+  }
+
+  /** Executed queries seen by a listener while `body` runs. */
+  private def queriesDuring(expected: Int)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = { seen.add(qe); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = { seen.add(qe); () }
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      val deadline = System.currentTimeMillis() + 10000
+      while (seen.size < expected && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      Thread.sleep(250)
+    } finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+  }
+
+  /** True when the query reads files: a file scan in its executed plan, or
+    * a file relation in a command's logical query (a JDBC save plans its
+    * query inside the command). */
+  private def scansFiles(qe: org.apache.spark.sql.execution.QueryExecution)
+      : Boolean = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    def logical(p: QueryPlan[_]): Boolean =
+      p match {
+        case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+        case other =>
+          other.children.exists(c => logical(c.asInstanceOf[QueryPlan[_]])) ||
+            other.innerChildren.exists(logical)
+      }
+    helper.collectWithSubqueries(qe.executedPlan) {
+      case s: FileSourceScanExec => s }.nonEmpty || logical(qe.analyzed)
+  }
+
+  test("after build, sinks and report scan materialised blocks, never files") {
+    val raw = rawCsvDir
+    def csv(t: String) = HrPipeline.readCsv(spark, raw, t)
+    val built = HrPipeline.build(spark, csv("employees"), csv("departments"),
+      csv("performance_reviews"), csv("projects"), csv("project_assignments"),
+      asOf)
+    val outDir = java.nio.file.Files.createTempDirectory("hr_pin_out").toString
+    val url = "jdbc:derby:memory:hr_pin;create=true"
+    try {
+      val qes = queriesDuring(6 + 6 + 6 + 5) {
+        HrPipeline.writeCsv(built, s"$outDir/csv")
+        HrPipeline.writeParquet(built, s"$outDir/parquet")
+        HrPipeline.writeJdbc(built, url, "hr", "hr", None)
+        HrReport.summaryReport(spark, built.summaryDeptMetrics,
+          built.summaryEmpPerformance, built.projectWorkload)
+      }
+      assert(qes.size >= 23)
+      // the pin can see a file scan: the same check flags a raw CSV read
+      assert(scansFiles(csv("employees").queryExecution))
+      val fileScans = qes.filter(scansFiles)
+      assert(fileScans.isEmpty,
+        s"queries reading files after build:\n${fileScans.mkString("\n")}")
+    } finally built.unpersist()
+  }
+
+  test("Outputs.unpersist frees every block build persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val built = HrPipeline.build(spark, employees, departments, reviews,
+      projects, assignments, asOf)
+    assert(sc.getPersistentRDDs.size === before + 8)
+    built.unpersist()
+    assert(sc.getPersistentRDDs.size === before)
   }
 
   /** The three fixture tables written as raw CSVs for the CLI entries. */
