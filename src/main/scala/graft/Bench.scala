@@ -3,27 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata ships one parquet file per table; small split size keeps
-      // local scans parallel (a real lake has many files instead)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // default codegen cache (100 classes) evicts every compiled stage
-      // between the warm and timed passes of a 50-query suite, so pass 2
-      // would re-pay Janino compilation it was meant to amortize; sized to
-      // hold the whole suite (steady-state cost is what a long-lived
-      // cluster session sees)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // the library's production posture: every graft function + the HOF
-      // fusion rule (plans/GraftExtensions scaladoc)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     // A/B hook for the injected optimizer rules: exclude by rule name to
     // measure a query with and without a fusion (the SCALING.md round-11
     // addendum's FuseVectorHofs off/on pair is produced exactly this way).

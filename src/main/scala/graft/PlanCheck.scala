@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries so scan pruning
   * (ReadSchema / PushedFilters), join strategies (BroadcastHashJoin vs
   * SortMergeJoin), and WholeStageCodegen spans can be audited.
@@ -14,14 +12,7 @@ object PlanCheck {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q_scan_project", "q_agg_dept_summary", "q_join_left_enrich",
         "q_anti_fk", "q_topk", "q_dedup_keyed")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.get()
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

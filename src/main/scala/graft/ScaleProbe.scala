@@ -715,29 +715,14 @@ object ScaleProbe {
       if (qFilter.isEmpty) hostileVecStreamFaces
       else hostileVecStreamFaces.filter(qFilter)
     val base = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same steady-state codegen cache as Bench: 13 queries x 4 factors
-      // would otherwise evict and recompile every stage per factor,
-      // polluting the growth ratios with compile noise
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // stateMetrics derives peak state from sq.recentProgress, which
-      // retains only the last numRecentProgressUpdates micro-batches
-      // (default 100): a maxFilesPerTrigger=1 source replaying >100
-      // files would silently understate the peak — the exact number the
-      // state-bound claims rest on. Retention is raised far above any
-      // probe's possible micro-batch count so the peak is a true max.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      // the library's production posture: every graft function + the HOF
-      // fusion rule (plans/GraftExtensions scaladoc)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
+    // stateMetrics derives peak state from sq.recentProgress, which
+    // retains only the last numRecentProgressUpdates micro-batches
+    // (default 100): a maxFilesPerTrigger=1 source replaying >100
+    // files would silently understate the peak — the exact number the
+    // state-bound claims rest on. Retention is raised far above any
+    // probe's possible micro-batch count so the peak is a true max.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
     // same A/B hook as Bench: exclude an injected rule by name to probe
     // a query's interpreted arm (see plans/GraftExtensions scaladoc)
     sys.env.get("SPARK_GRAFT_EXCLUDE_RULES").foreach(r =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
       s"usage: graft.Verify <sfDir> <outDir> (got ${args.length} args: " +
         s"${args.mkString(", ")})")
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata ships one parquet file per table; small split size keeps
-      // local scans parallel (a real lake has many files instead)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // the library's production posture: every graft function + the HOF
-      // fusion rule (plans/GraftExtensions scaladoc)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     // fail fast if any dedup bucket cap engages on the verify corpus: the
     // capped queries carry EXACT DuckDB oracles, so a silent truncation
     // would surface as an unexplained hash mismatch — an explicit

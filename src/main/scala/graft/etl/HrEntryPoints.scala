@@ -27,17 +27,9 @@ object HrEntryPoints {
       HrPipeline.readCsv(spark, dir, "projects"),
       HrPipeline.readCsv(spark, dir, "project_assignments"), asOf)
 
-  private[etl] def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("hr-etl")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** `SPARK_MASTER` if set (a deployment address), else the local default. */
+  private[etl] def master: String =
+    sys.env.getOrElse("SPARK_MASTER", s"local[${graft.Session.cpus}]")
 }
 
 /** Entry point 2 — transform + validate with previews (reference
@@ -84,7 +76,7 @@ object HrTransformDemo {
     require(args.nonEmpty,
       "usage: HrTransformDemo <stagedCsvDir> [asOf yyyy-MM-dd]")
     val asOf = Date.valueOf(args.lift(1).getOrElse("2026-01-01"))
-    val spark = HrEntryPoints.session()
+    val spark = graft.Session.get(HrEntryPoints.master)
     println(run(spark, args(0), asOf))
     spark.stop()
   }
@@ -122,7 +114,7 @@ object HrLoadDemo {
     require(args.length >= 2,
       "usage: HrLoadDemo <stagedCsvDir> <outDir> [asOf yyyy-MM-dd] [jdbcUrl]")
     val asOf = Date.valueOf(args.lift(2).getOrElse("2026-01-01"))
-    val spark = HrEntryPoints.session()
+    val spark = graft.Session.get(HrEntryPoints.master)
     run(spark, args(0), args(1), asOf, args.lift(3))
     spark.stop()
   }

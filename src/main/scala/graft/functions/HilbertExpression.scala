@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,13 +90,8 @@ case class HilbertD2(left: Expression, right: Expression)
 
 object HilbertFunctions {
 
-  /** Idempotently register `hilbert_d2` on this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_d2", exprs => HilbertD2(exprs.head, exprs(1)), "internal")
-
-  /** hilbert_d2(bx, by) — callers must have invoked [[register]] on the
-    * session that will analyze the plan. */
+  /** hilbert_d2(bx, by) — the analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def hilbertD2(bx: Column, by: Column): Column =
     call_function("hilbert_d2", bx, by)
 }

@@ -64,9 +64,7 @@ object NfcNormalize {
     }
   }
 
-  /** Registry builder, shared between [[graft.queries.Nfc.of]]'s
-    * temp-function registration and the
-    * [[graft.plans.GraftExtensions]] session-extension injection. */
+  /** Registry builder for [[graft.plans.GraftExtensions.functions]]. */
   private[graft] val builder: Seq[Expression] => Expression = {
     case Seq(c) => NfcNormalize(c)
     case _ => throw new IllegalArgumentException("nfc_normalize(text)")

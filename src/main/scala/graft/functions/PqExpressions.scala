@@ -341,11 +341,10 @@ object PqFunctions {
 
   /** Content digest of the full codebook (every centroid tick plus the
     * m/subDim geometry) — MD5, not `hashCode`, so two distinct codebooks
-    * bound in one session cannot collide and silently
-    * createOrReplaceTempFunction over each other (a 32-bit hashCode
-    * collision would hand a previously returned Column builder the wrong
-    * codebook). 16 hex chars of MD5 keeps the registered name short while
-    * leaving collision probability negligible (~2^-64 per pair). */
+    * bound in one session cannot collide (a 32-bit hashCode collision
+    * would hand the second codebook's caller the first one's kernels).
+    * 16 hex chars of MD5 keeps the registered name short while leaving
+    * collision probability negligible (~2^-64 per pair). */
   private def tag(books: PqBooks): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val sb = new StringBuilder
@@ -360,16 +359,17 @@ object PqFunctions {
 
   /** Registers `pq_encode_<tag>` / `pq_dtabs_<tag>` (codebook-bound) and
     * the codebook-free `pq_adist`, returning the Column builders bound
-    * to exactly this codebook. */
+    * to exactly this codebook. A name already registered is kept: its
+    * content tag means it is bound to this same codebook. */
   def bind(spark: SparkSession, books: PqBooks)
       : (Column => Column, Column => Column) = {
     val t = tag(books)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"pq_encode_$t", exprs => PqEncode(exprs.head, books), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"pq_dtabs_$t", exprs => PqDtabs(exprs.head, books), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adist", exprs => PqAdist(exprs.head, exprs(1)), "internal")
+    graft.Session.registerIfAbsent(spark, s"pq_encode_$t", classOf[PqEncode],
+      exprs => PqEncode(exprs.head, books))
+    graft.Session.registerIfAbsent(spark, s"pq_dtabs_$t", classOf[PqDtabs],
+      exprs => PqDtabs(exprs.head, books))
+    graft.Session.registerIfAbsent(spark, "pq_adist", classOf[PqAdist],
+      exprs => PqAdist(exprs.head, exprs(1)))
     (c => call_function(s"pq_encode_$t", c),
       c => call_function(s"pq_dtabs_$t", c))
   }
@@ -422,8 +422,8 @@ object PqFunctions {
     * yields STRUCT<cells, rv>. */
   def bindResidual(spark: SparkSession, books: PqBooks): Column => Column = {
     val t = tag(books)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"pq_residual_$t", exprs => PqResidual(exprs.head, books), "internal")
+    graft.Session.registerIfAbsent(spark, s"pq_residual_$t",
+      classOf[PqResidual], exprs => PqResidual(exprs.head, books))
     c => call_function(s"pq_residual_$t", c)
   }
 }

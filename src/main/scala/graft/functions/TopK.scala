@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -91,11 +91,12 @@ case class TopKLongs(child: Expression, k: Int,
     copy(child = newChild)
 }
 
-/** Session registration + Column API (same pattern as [[VectorFunctions]]). */
+/** Registry builder + Column API (same pattern as [[VectorFunctions]]). */
 object TopKFunctions {
 
-  /** Registry builder, shared between [[register]] and the
-    * [[graft.plans.GraftExtensions]] session-extension injection. */
+  /** Registry builder for [[graft.plans.GraftExtensions.functions]]. The
+    * `k` argument must be a foldable integer literal — k IS the state
+    * bound, so a silently wrapped or runaway value defeats the point. */
   private[graft] val builder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 2,
       s"topk_longs(col, k) takes 2 arguments, got ${exprs.length}")
@@ -110,15 +111,8 @@ object TopKFunctions {
     TopKLongs(exprs.head, k)
   }
 
-  /** Idempotently register `topk_longs(col, k)` on this session. The `k`
-    * argument must be a foldable integer literal — k IS the state bound,
-    * so a silently wrapped or runaway value defeats the whole point. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_longs", builder, "internal")
-
-  /** topk_longs(col, k) — callers must have invoked [[register]] on the
-    * session that will analyze the plan. */
+  /** topk_longs(col, k) — the analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def topkLongs(col: Column, k: Int): Column =
     call_function("topk_longs", col, org.apache.spark.sql.functions.lit(k))
 }

@@ -144,8 +144,8 @@ object UgFunctions {
     * returns its Column builder. */
   def bind(spark: SparkSession, vocab: UgVocab): Column => Column = {
     val t = tag(vocab)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"ug_segment_$t", exprs => UgSegment(exprs.head, vocab), "internal")
+    graft.Session.registerIfAbsent(spark, s"ug_segment_$t",
+      classOf[UgSegment], exprs => UgSegment(exprs.head, vocab))
     c => call_function(s"ug_segment_$t", c)
   }
 }

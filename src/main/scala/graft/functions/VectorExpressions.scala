@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -412,54 +412,35 @@ case class VecGuard(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session registration + Column-level API (built on the function registry
-  * so no private Column constructors are needed). */
+/** Column-level API over the registered functions (built on the function
+  * registry so no private Column constructors are needed). */
 object VectorFunctions {
 
-  /** Idempotently register `cosine_sim` + `vec_norm` + `dot_product` on
-    * this session. Query builders call this with the session they receive. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm", exprs => VecNorm(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2_sq", exprs => L2Sq(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tick_vec", exprs =>
-        TickVec(exprs.head, graft.queries.SimilarityQueries.TickScale),
-      "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_guard", exprs => VecGuard(exprs.head), "internal")
-  }
-
-  /** cosine_sim(a, b) — callers must have invoked [[register]] on the
-    * session that will analyze the plan. */
+  /** cosine_sim(a, b) — the analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
-  /** vec_norm(v) — callers must have invoked [[register]] on the session
-    * that will analyze the plan. */
+  /** vec_norm(v) — the analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def vecNorm(v: Column): Column = call_function("vec_norm", v)
 
-  /** dot_product(a, b) — callers must have invoked [[register]] on the
-    * session that will analyze the plan. */
+  /** dot_product(a, b) — the analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def dotProduct(a: Column, b: Column): Column =
     call_function("dot_product", a, b)
 
-  /** l2_sq(a, b) over ARRAY<BIGINT> — callers must have invoked
-    * [[register]] on the session that will analyze the plan. */
+  /** l2_sq(a, b) over ARRAY<BIGINT> — the analyzing session needs the
+    * extension or [[graft.Session.install]]. */
   def l2Sq(a: Column, b: Column): Column = call_function("l2_sq", a, b)
 
   /** tick_vec(v) at the product [[graft.queries.SimilarityQueries
-    * .TickScale]] — null on an all-zero tick vector. Callers must have
-    * invoked [[register]] on the session that will analyze the plan. */
+    * .TickScale]] — null on an all-zero tick vector. The analyzing
+    * session needs the extension or [[graft.Session.install]]. */
   def tickVec(v: Column): Column = call_function("tick_vec", v)
 
   /** vec_guard(v) — the semantic-dedup input predicate as one codegen'd
-    * boolean. Callers must have invoked [[register]] on the session
-    * that will analyze the plan. */
+    * boolean. The analyzing session needs the extension or
+    * [[graft.Session.install]]. */
   def vecGuard(v: Column): Column = call_function("vec_guard", v)
 
   /** The declarative higher-order-function dot product —

@@ -108,8 +108,8 @@ object WpFunctions {
     * returns its Column builder. */
   def bind(spark: SparkSession, vocab: WpVocab): Column => Column = {
     val t = tag(vocab)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"wp_stats_$t", exprs => WpStats(exprs.head, vocab), "internal")
+    graft.Session.registerIfAbsent(spark, s"wp_stats_$t", classOf[WpStats],
+      exprs => WpStats(exprs.head, vocab))
     c => call_function(s"wp_stats_$t", c)
   }
 }

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate,
   ArrayTransform, Expression, ExpressionInfo, LambdaFunction, Literal,
   Multiply, NamedExpression, NamedLambdaVariable, ZipWith}
@@ -9,7 +10,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.functions.{CosineSim, DotProduct, VecNorm}
+import graft.functions.{CosineSim, DotProduct, HilbertD2, L2Sq,
+  NfcNormalize, TickVec, TopKFunctions, TopKLongs, VecGuard, VecNorm,
+  WordShingles}
 
 /** Rewrite the interpreted higher-order-function dot-product pattern
   *
@@ -141,38 +144,42 @@ object FuseVectorHofs extends Rule[LogicalPlan] {
   *
   * {{{ spark.sql.extensions=graft.plans.GraftExtensions }}}
   *
-  * Injects (a) the five custom expressions as session-registry functions
-  * (usable from `spark.sql` text and `call_function` without any
-  * `register()` call — the per-query `register()` helpers stay for
-  * sessions built without the extension), and (b) [[FuseVectorHofs]] as
-  * an operator-optimization rule. Bench/Verify/ScaleProbe and the test
-  * base all build their sessions with this config, so every oracle run
-  * and every spec executes under the extension — the full suite is the
-  * no-regression witness for the rule's no-fire conservatism. */
+  * Injects (a) every fixed-name function of [[GraftExtensions.functions]]
+  * into the session registry, so `spark.sql` text and `call_function`
+  * resolve them with no install step, and (b) [[FuseVectorHofs]] as an
+  * operator-optimization rule. [[graft.Session.get]] builds every session
+  * of the library's mains and specs with this extension, so every oracle
+  * run and every spec executes under it — the full suite is the
+  * no-regression witness for the rule's no-fire conservatism. A caller's
+  * own session built without it gets the same functions (not the rule)
+  * from [[graft.Session.install]], which reads the same table. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getName, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[CosineSim]),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_norm"),
-      info("vec_norm", classOf[VecNorm]),
-      (exprs: Seq[Expression]) => VecNorm(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", classOf[DotProduct]),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", classOf[graft.functions.WordShingles]),
-      graft.queries.Shingles.builder))
-    ext.injectFunction((FunctionIdentifier("topk_longs"),
-      info("topk_longs", classOf[graft.functions.TopKLongs]),
-      graft.functions.TopKFunctions.builder))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", classOf[graft.functions.NfcNormalize]),
-      graft.functions.NfcNormalize.builder))
+    GraftExtensions.functions.foreach { case (name, clazz, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
     ext.injectOptimizerRule(_ => FuseVectorHofs)
   }
+}
+
+object GraftExtensions {
+
+  /** Every fixed-name graft function: SQL name, expression class and
+    * registry builder. The one list both the extension and
+    * [[graft.Session.install]] read. */
+  private[graft] val functions: Seq[(String, Class[_], FunctionBuilder)] =
+    Seq(
+      ("cosine_sim", classOf[CosineSim], e => CosineSim(e.head, e(1))),
+      ("vec_norm", classOf[VecNorm], e => VecNorm(e.head)),
+      ("dot_product", classOf[DotProduct], e => DotProduct(e.head, e(1))),
+      ("l2_sq", classOf[L2Sq], e => L2Sq(e.head, e(1))),
+      ("tick_vec", classOf[TickVec],
+        e => TickVec(e.head, graft.queries.SimilarityQueries.TickScale)),
+      ("vec_guard", classOf[VecGuard], e => VecGuard(e.head)),
+      ("topk_longs", classOf[TopKLongs], TopKFunctions.builder),
+      ("hilbert_d2", classOf[HilbertD2], e => HilbertD2(e.head, e(1))),
+      ("word_shingles", classOf[WordShingles], graft.queries.Shingles.builder),
+      ("nfc_normalize", classOf[NfcNormalize], NfcNormalize.builder))
 }

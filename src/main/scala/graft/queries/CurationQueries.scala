@@ -260,7 +260,7 @@ object CurationQueries {
     // doesn't).
     "q_emb_label_stats" -> ((s, dir) => {
       import s.implicits._
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       Tables.table(s, dir, "embeddings")
         .select($"label",
           floor(VectorFunctions.vecNorm($"embedding".cast("array<double>"))

@@ -2313,7 +2313,7 @@ object DedupQueries {
     // pairs; the pair-generation and scoring logic is unchanged.
     "q_dedup_embedding" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.VectorFunctions.register(s)
+      graft.Session.install(s)
       val vecs = Tables.table(s, dir, "embeddings")
         .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       val a = vecs.select($"vec_id".as("vec_a"), $"label", $"v".as("va"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The Unicode-canonicalization stage for text pipelines — the
   * [[Shingles]] wrapper pattern over [[graft.functions.NfcNormalize]]:
-  * registered idempotently on the analyzing session, named exactly
+  * installed on the analyzing session if missing, named exactly
   * like DuckDB's `nfc_normalize` so the oracle SQL and the Spark plan
   * read identically. Compose it AHEAD of [[graft.Clean.fingerprint]]
   * (or any shingle/simhash derivation) to make canonically-equivalent
@@ -14,14 +14,10 @@ import org.apache.spark.sql.functions._
   * NfcSpec pins the cross-engine fixture equivalence. */
 object Nfc {
 
-  private def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", graft.functions.NfcNormalize.builder, "internal")
-
   /** NFC-normalize a string column. Callers pass the session that will
     * ANALYZE the plan (the [[Shingles.of]] contract). */
   def of(spark: SparkSession, c: Column): Column = {
-    register(spark)
+    graft.Session.install(spark)
     call_function("nfc_normalize", c)
   }
 }

@@ -397,7 +397,7 @@ object ParityQueries {
     // rows; the oracle replays it as a rank window over the raw table.
     "q_agg_topk_bounded" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.TopKFunctions.register(s)
+      graft.Session.install(s)
       Tables.table(s, dir, "documents")
         .groupBy($"lang")
         .agg(graft.functions.TopKFunctions.topkLongs($"n_chars", 5)
@@ -470,7 +470,7 @@ object ParityQueries {
     // unrolled as 8 chained integer CTEs.
     "q_layout_hilbert" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.HilbertFunctions.register(s)
+      graft.Session.install(s)
       val o = Tables.table(s, dir, "orders")
         .select($"o_orderkey", $"o_custkey",
           datediff(to_date($"o_orderdate"),

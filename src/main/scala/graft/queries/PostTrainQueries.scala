@@ -170,7 +170,7 @@ object PostTrainQueries {
     // Hard oracle: cosine is the suite's 1e-4-rounded kernel, windows
     // and the α-band replay exactly.
     "q_contrastive_negatives" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = Tables.table(s, dir, "embeddings")
         .filter($"label".isNotNull)

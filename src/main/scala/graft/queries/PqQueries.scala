@@ -130,7 +130,7 @@ object PqQueries {
   private[graft] def trainBooksOn(ticked: DataFrame, m: Int, subDim: Int,
       k: Int, iters: Int): Seq[(Int, Int, Seq[Long])] = {
     val s = ticked.sparkSession
-    VectorFunctions.register(s)
+    graft.Session.install(s)
     import s.implicits._
     var books: Seq[(Int, Int, Seq[Long])] = ticked.filter($"vec_id" < k)
       .select($"vec_id", $"tv")
@@ -304,7 +304,7 @@ object PqQueries {
     // signal). HARD oracle: the unrolled integer k-means + final
     // assignment replay exactly — every number is a long.
     "q_emb_pq_codes" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)
@@ -338,7 +338,7 @@ object PqQueries {
     // it with coarse cells; both return exact longs, so the oracle
     // replay is order-free semantic equality.
     "q_ann_pq" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)
@@ -378,7 +378,7 @@ object PqQueries {
     // kernels, broadcast ADC shape, and results.
     "q_sql_ann_pq" -> ((s, dir) => {
       graft.sources.Views.registerTestdata(s, dir)
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)
@@ -430,7 +430,7 @@ object PqQueries {
     // Everything after the cell join is the same broadcast-dtab ADC as
     // q_ann_pq.
     "q_ann_ivfpq" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)
@@ -458,7 +458,7 @@ object PqQueries {
     // per-rung scan counts and the per-rung rankings — checkpointed
     // once; each downstream is a single window/aggregate over it.
     "q_ann_nprobe_tune" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)
@@ -538,7 +538,7 @@ object PqQueries {
     // Fan-out discipline: the residual frame feeds the residual
     // trainer's rounds AND the candidate encode — checkpointed once.
     "q_ann_ivfpq_res" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val ticked = SimilarityQueries.withTicks(vecs).select($"vec_id", $"tv")
@@ -566,7 +566,7 @@ object PqQueries {
     // A variant row appears iff it scored at least one pair (the
     // HAVING guard, mirrored by the filter on candidates).
     "q_ann_variant_audit" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       import s.implicits._
       val vecs = SimilarityQueries.semDedupInput(s, dir)
       val books = pqCodebooks(vecs)

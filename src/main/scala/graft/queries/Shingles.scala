@@ -14,7 +14,7 @@ import graft.functions.WordShingles
   * `list_transform(range(...))` replay.
   *
   * The windowing itself is the codegen'd [[graft.functions.WordShingles]]
-  * expression (registered idempotently on the active session): the
+  * expression (installed on the analyzing session if missing): the
   * composable `transform(sequence(...), i -> concat_ws(...))` it
   * replaced is an interpreted higher-order function — per-element lambda
   * dispatch on the hottest path of seven queries (measured before/after
@@ -25,8 +25,7 @@ import graft.functions.WordShingles
   */
 object Shingles {
 
-  /** Registry builder, shared between [[register]] and the
-    * [[graft.plans.GraftExtensions]] session-extension injection. */
+  /** Registry builder for [[graft.plans.GraftExtensions.functions]]. */
   private[graft] val builder
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression]
         => org.apache.spark.sql.catalyst.expressions.Expression = {
@@ -36,17 +35,13 @@ object Shingles {
       "word_shingles(tokens, literal width)")
   }
 
-  private def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", builder, "internal")
-
-  /** Callers pass the session that will ANALYZE the plan (same contract
-    * as [[graft.functions.VectorFunctions.register]]) — the thread-local
+  /** Callers pass the session that will ANALYZE the plan (the
+    * [[graft.Session.install]] contract) — the thread-local
     * active session is the wrong one whenever plans are built for a
     * different/new session or off-thread. */
   def of(spark: SparkSession, t: Column, w: Int,
          distinct: Boolean = true): Column = {
-    register(spark)
+    graft.Session.install(spark)
     val grams = when(size(t) >= w, call_function("word_shingles", t, lit(w)))
       .otherwise(array(concat_ws(" ", t)))
     if (distinct) array_distinct(grams) else grams

@@ -46,7 +46,7 @@ object SimilarityQueries {
   private def mmrArtifacts(s: SparkSession, dir: String)
       : (Seq[(Long, Long)], Map[(Long, Long), Long]) = {
     import s.implicits._
-    VectorFunctions.register(s)
+    graft.Session.install(s)
     def tick(c: Column) = floor(c * 10000d + 0.5d).cast("long")
     val vecs = Tables.table(s, dir, "embeddings")
       .select($"vec_id", dvec($"embedding").as("v"))
@@ -175,7 +175,7 @@ object SimilarityQueries {
     // scored by the codegen'd CosineSim expression.
     "q_knn_brute" -> ((s, dir) => {
       import s.implicits._
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       val vecs = Tables.table(s, dir, "embeddings")
         .select($"vec_id", dvec($"embedding").as("v"))
       val probes = vecs.filter($"vec_id" < 10)
@@ -376,7 +376,7 @@ object SimilarityQueries {
     // measures recall vs q_knn_brute.
     "q_ann_lsh" -> ((s, dir) => {
       import s.implicits._
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       val vecs = withRhpSignature(
         Tables.table(s, dir, "embeddings")
           .select($"vec_id", dvec($"embedding").as("v")), 8)
@@ -409,7 +409,7 @@ object SimilarityQueries {
     // signature/bucket/multi-probe/top-k pipeline with a hard oracle.
     "q_ann_lsh_sql" -> ((s, dir) => {
       import s.implicits._
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       val bits = 8
       val dims = 64
       val par = rhpParities(bits, dims)
@@ -530,7 +530,7 @@ object SimilarityQueries {
     // JVM recomputation (pairing, tau, blame) plus the cap-shrink
     // contract as a second anchor.
     "q_semdedup_trained" -> ((s, dir) => {
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       val vecs = semDedupInput(s, dir)
       semDedupPipeline(withTicks(vecs),
         ivfCentroids(vecs, k = 16, iters = 2), 0.3, assignOn = "dv")
@@ -571,7 +571,7 @@ object SimilarityQueries {
     // recomputation stays as the second anchor.
     "q_semdedup_incremental_trained" -> ((s, dir) => {
       import s.implicits._
-      VectorFunctions.register(s)
+      graft.Session.install(s)
       val split = 250L
       val vecs = semDedupInput(s, dir)
       semDedupIncrementalPipeline(withTicks(vecs),
@@ -595,7 +595,7 @@ object SimilarityQueries {
       cents: Seq[(Int, Seq[Double])], nprobe: Int,
       assignOn: String = "v"): DataFrame = {
     import vecs.sparkSession.implicits._
-    VectorFunctions.register(vecs.sparkSession)
+    graft.Session.install(vecs.sparkSession)
     if (cents.isEmpty)
       return vecs.limit(0).select($"vec_id".as("query_id"),
         lit(1).as("rank"), $"vec_id".as("neighbor_id"),
@@ -643,7 +643,7 @@ object SimilarityQueries {
     // users) must not depend on some OTHER query having registered the
     // vector functions on this session first — the r10 knee hunt hit
     // exactly that latent ordering bug (cosine_sim unresolved)
-    VectorFunctions.register(vecs.sparkSession)
+    graft.Session.install(vecs.sparkSession)
     if (cents.isEmpty)
       return vecs.limit(0).select($"vec_id", lit(0).as("cell"),
         lit(0).as("is_dup"), $"vec_id".as("dup_of"), lit(0.0).as("dup_cos"))
@@ -680,7 +680,7 @@ object SimilarityQueries {
       cents: Seq[(Int, Seq[Double])], tau: Double, split: Long,
       assignOn: String = "v"): DataFrame = {
     import vecs.sparkSession.implicits._
-    VectorFunctions.register(vecs.sparkSession) // see semDedupPipeline
+    graft.Session.install(vecs.sparkSession) // see semDedupPipeline
     if (cents.isEmpty)
       return vecs.limit(0).select($"vec_id", lit(0).as("cell"))
     val assigned = assignCells(vecs, cents, assignOn)
@@ -742,7 +742,7 @@ object SimilarityQueries {
     // lambdas per corpus row on every similarity-family scan. The
     // explicit isNotNull conjunct keeps the parquet null-filter
     // pushdown the opaque kernel would otherwise lose.
-    VectorFunctions.register(vecs.sparkSession)
+    graft.Session.install(vecs.sparkSession)
     vecs.filter(col("v").isNotNull && VectorFunctions.vecGuard(col("v")))
   }
 
@@ -810,7 +810,7 @@ object SimilarityQueries {
     // argument), but the projection stays inside whole-stage codegen,
     // which the interpreted HOF lambda denied to EVERY downstream
     // trained-quantizer projection it collapsed into
-    VectorFunctions.register(vecs.sparkSession)
+    graft.Session.install(vecs.sparkSession)
     vecs.withColumn("tv", VectorFunctions.tickVec(col("v")))
       .filter(col("tv").isNotNull)
       .withColumn("dv", col("tv").cast("array<double>"))

@@ -27,7 +27,7 @@ object SqlQueries {
 
   private def sqlOver(q: String)(s: SparkSession, dir: String): DataFrame = {
     Views.registerTestdata(s, dir)
-    VectorFunctions.register(s)
+    graft.Session.install(s)
     s.sql(q)
   }
 

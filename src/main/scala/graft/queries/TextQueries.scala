@@ -815,7 +815,7 @@ object TextQueries {
       // symbol-count broadcast subtrees and the main argmax branch
       // (relation deduplication gives each occurrence fresh exprIds;
       // the executed plan showed two independent seg scans + two pair
-      // shuffles — WpPlanProbe), so the "fusion" net-ADDED an exchange
+      // shuffles), so the "fusion" net-ADDED an exchange
       // and measured 2.25 → 3.5 s on q_doc_wordpiece_train. The two
       // honest aggregations below stay.
       val symCnt = seg.select($"cnt", explode(syms).as("sym"))

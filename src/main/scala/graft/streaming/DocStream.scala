@@ -668,7 +668,7 @@ object DocStream extends Serializable {
     import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "semanticDedup needs at least one centroid")
     // cosineSim resolves through the session's function registry
-    graft.functions.VectorFunctions.register(newVecs.sparkSession)
+    graft.Session.install(newVecs.sparkSession)
     // prepared=true: historyVecs IS the [[prepareSemIndex]] output
     // (cell, hv) — cached once by the caller, who also owns unpersist
     val hist =
@@ -699,7 +699,7 @@ object DocStream extends Serializable {
         graft.queries.SimilarityQueries.semCentroids(16, 64),
       assignTicks: Boolean = false): DataFrame = {
     import graft.queries.SimilarityQueries
-    graft.functions.VectorFunctions.register(historyVecs.sparkSession)
+    graft.Session.install(historyVecs.sparkSession)
     val guarded = SimilarityQueries.semDedupGuard(
       historyVecs.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v")))
@@ -749,7 +749,7 @@ object DocStream extends Serializable {
       cents: Seq[(Int, Seq[Double])],
       assignTicks: Boolean = false): DataFrame = {
     import graft.queries.SimilarityQueries
-    graft.functions.VectorFunctions.register(corpusVecs.sparkSession)
+    graft.Session.install(corpusVecs.sparkSession)
     val guarded = SimilarityQueries.semDedupGuard(
       corpusVecs.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v")))
@@ -792,7 +792,7 @@ object DocStream extends Serializable {
     import spark.implicits._
     import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "annSearch needs at least one centroid")
-    graft.functions.VectorFunctions.register(spark)
+    graft.Session.install(spark)
     val kL = k
     val guarded = SimilarityQueries.semDedupGuard(
       queryVecs.select(col("vec_id"),
@@ -853,7 +853,7 @@ object DocStream extends Serializable {
     import spark.implicits._
     import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "searchDiverse needs at least one centroid")
-    graft.functions.VectorFunctions.register(spark)
+    graft.Session.install(spark)
     val poolL = pool
     val kL = k
     val guarded = SimilarityQueries.semDedupGuard(
@@ -933,7 +933,7 @@ object DocStream extends Serializable {
       books: Seq[(Int, Int, Seq[Long])]): DataFrame = {
     import graft.queries.{PqQueries, SimilarityQueries}
     val s = corpusVecs.sparkSession
-    graft.functions.VectorFunctions.register(s)
+    graft.Session.install(s)
     val (encode, _) = graft.functions.PqFunctions.bind(s,
       graft.functions.PqBooks(books, PqQueries.PqM, PqQueries.PqSubDim))
     val guarded = SimilarityQueries.semDedupGuard(
@@ -972,7 +972,7 @@ object DocStream extends Serializable {
     import graft.queries.{PqQueries, SimilarityQueries}
     require(books.nonEmpty, "annSearchPq needs a trained codebook")
     require(cents.nonEmpty, "annSearchPq needs at least one centroid")
-    graft.functions.VectorFunctions.register(spark)
+    graft.Session.install(spark)
     val (_, dtabs) = graft.functions.PqFunctions.bind(spark,
       graft.functions.PqBooks(books, PqQueries.PqM, PqQueries.PqSubDim))
     val kL = k
@@ -1015,7 +1015,7 @@ object DocStream extends Serializable {
       coarse: Seq[(Int, Int, Seq[Long])],
       books: Seq[(Int, Int, Seq[Long])]): DataFrame = {
     import graft.queries.{PqQueries, SimilarityQueries}
-    graft.functions.VectorFunctions.register(corpusVecs.sparkSession)
+    graft.Session.install(corpusVecs.sparkSession)
     val guarded = SimilarityQueries.semDedupGuard(
       corpusVecs.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v")))
@@ -1048,7 +1048,7 @@ object DocStream extends Serializable {
     import graft.queries.{PqQueries, SimilarityQueries}
     require(coarse.nonEmpty, "annSearchPqRes needs a trained coarse book")
     require(books.nonEmpty, "annSearchPqRes needs a trained codebook")
-    graft.functions.VectorFunctions.register(spark)
+    graft.Session.install(spark)
     val kL = k
     val guarded = SimilarityQueries.semDedupGuard(
       queryVecs.select(col("vec_id"),
@@ -1415,7 +1415,7 @@ object DocStream extends Serializable {
                           assignTicks: Boolean = false): Dataset[SemAdmit] = {
     import spark.implicits._
     require(cents.nonEmpty, "semanticDedupOnline needs at least one centroid")
-    graft.functions.VectorFunctions.register(spark)
+    graft.Session.install(spark)
     // local copies: the nested function must not capture the module
     val tauL = tau
     val cap = spark.conf.getOption("spark.graft.dedup.maxBucket")

@@ -3,42 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One lazily-created local session per suite, configured like
-  * Verify/Bench (UTC, nanos-as-long for the events table, small shuffle
-  * partition count for local runs). */
+/** Every suite shares the JVM's one session from [[Session.get]] on
+  * `local[4]`: the library's confs and [[graft.plans.GraftExtensions]],
+  * whichever suite asks first, so every spec runs under the extension and
+  * the whole suite doubles as the no-regression witness for its rule. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Verify/Bench: specs run under the session extension, so the
-      // whole suite doubles as the no-regression witness for its rule
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may return a session an earlier suite created WITHOUT
-    // the static extensions conf (suite order in the shared test JVM is
-    // nondeterministic): wire the same surface defensively — ALL five
-    // injected functions via the registry, the fusion rule via
-    // experimental extraOptimizations, which honors the same
-    // excludedRules protocol
-    if (!s.conf.get("spark.sql.extensions", "").contains("GraftExtensions")) {
-      graft.functions.VectorFunctions.register(s)
-      graft.functions.TopKFunctions.register(s)
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "word_shingles", graft.queries.Shingles.builder, "internal")
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nfc_normalize", graft.functions.NfcNormalize.builder, "internal")
-      if (!s.experimental.extraOptimizations
-            .exists(_ eq graft.plans.FuseVectorHofs))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.FuseVectorHofs
-    }
-    s
-  }
+  lazy val spark: SparkSession = Session.get("local[4]")
 
   def sf0001 = "/root/testdata/sf0.001"
 }

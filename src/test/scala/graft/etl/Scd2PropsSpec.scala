@@ -24,16 +24,8 @@ object Scd2PropsSpec extends Properties("Scd2") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters)
       : org.scalacheck.Test.Parameters = p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("Scd2PropsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // same static conf as SparkTestBase: whichever suite creates the
-    // shared test session first must carry the extension
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  // the session SparkTestBase shares, whichever suite asks first
+  private lazy val spark: SparkSession = graft.Session.get("local[4]")
 
   import spark.implicits._
 

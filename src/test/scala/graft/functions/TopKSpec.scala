@@ -10,7 +10,6 @@ class TopKSpec extends SparkTestBase {
   import spark.implicits._
 
   test("topk_longs equals slice(sorted collect_list) across many partitions") {
-    TopKFunctions.register(spark)
     // 40 partitions force map-side partials + a real merge phase; values
     // collide across groups to exercise duplicate handling
     val df = spark.range(0, 10000, 1, 40)
@@ -25,7 +24,6 @@ class TopKSpec extends SparkTestBase {
   }
 
   test("nulls are skipped; groups smaller than k yield short arrays") {
-    TopKFunctions.register(spark)
     val df = Seq[(String, Option[Long])](
       ("a", Some(3L)), ("a", None), ("a", Some(9L)),
       ("b", None)).toDF("g", "v")

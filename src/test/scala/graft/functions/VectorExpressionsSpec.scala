@@ -10,7 +10,6 @@ class VectorExpressionsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("CosineSim == HOF aggregate/zip_with formulation, bitwise") {
-    VectorFunctions.register(spark)
     val vecs = Tables.table(spark, sf0001, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val a = vecs.select($"vec_id".as("ia"), $"v".as("va"))
@@ -29,7 +28,6 @@ class VectorExpressionsSpec extends SparkTestBase {
   }
 
   test("CosineSim null and zero-norm edges") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Some(Seq(1.0, 0.0)), Some(Seq(1.0, 0.0))),   // identical -> 1.0
       (Some(Seq(1.0, 0.0)), Some(Seq(0.0, 1.0))),   // orthogonal -> 0.0

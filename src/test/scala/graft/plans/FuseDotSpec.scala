@@ -169,13 +169,28 @@ class FuseDotSpec extends SparkTestBase {
     assert(fusedRows === expect)
   }
 
-  test("the injected registry serves dot_product without any register()") {
-    // GraftExtensions injectFunction: a fresh query can call the function
-    // by name with no VectorFunctions.register call on this session
-    fx.createOrReplaceTempView("fuse_fx")
-    val direct = spark.sql(
-      "SELECT id, dot_product(x, y) AS d FROM fuse_fx WHERE id = 1")
-      .collect()
-    assert(direct.head.getDouble(1) === 32.0)
+  test("the injected registry serves every fixed-name function with no install") {
+    // a new session's registry holds only the builtins and what the
+    // extension injected, whatever earlier suites installed on `spark`
+    val fresh = spark.newSession()
+    val calls = Seq[(String, String, Any)](
+      ("cosine_sim", "cosine_sim(array(3D, 4D), array(3D, 4D))", 1.0),
+      ("vec_norm", "vec_norm(array(3D, 4D))", 5.0),
+      ("dot_product", "dot_product(array(1D, 2D, 3D), array(4D, 5D, 6D))",
+        32.0),
+      ("l2_sq", "l2_sq(array(1L, 2L), array(4L, 6L))", 25L),
+      ("tick_vec", "tick_vec(array(1D, 0.5D))", Seq(1L << 20, 1L << 19)),
+      ("vec_guard", "vec_guard(array(1D, 0D))", true),
+      ("topk_longs", "topk_longs(v, 2) FROM VALUES (1L), (3L), (2L) AS t(v)",
+        Seq(3L, 2L)),
+      ("hilbert_d2", "hilbert_d2(1L, 0L)",
+        graft.functions.HilbertKernels.d2(1L, 0L)),
+      ("word_shingles", "word_shingles(array('a', 'b', 'c'), 2)",
+        Seq("a b", "b c")),
+      ("nfc_normalize", "nfc_normalize('e\\u0301')", "\u00e9"))
+    assert(calls.map(_._1).toSet === GraftExtensions.functions.map(_._1).toSet)
+    calls.foreach { case (name, call, want) =>
+      assert(fresh.sql(s"SELECT $call").head().get(0) === want, name)
+    }
   }
 }

@@ -14,16 +14,8 @@ import org.scalacheck.{Gen, Prop, Properties}
   * artifact is not on the offline classpath). */
 object BucketPairsPropsSpec extends Properties("bucketPairs") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("BucketPairsPropsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // same static conf as SparkTestBase: whichever suite creates the
-    // shared test session first must carry the extension
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  // the session SparkTestBase shares, whichever suite asks first
+  private lazy val spark: SparkSession = graft.Session.get("local[4]")
 
   import spark.implicits._
 

@@ -129,7 +129,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q_emb_label_stats: fixed-point norms, exact group arithmetic") {
-    VectorFunctions.register(spark)
     val out = run("q_emb_label_stats")
     assert(out.columns.toSeq ===
       Seq("label", "vec_count", "min_norm", "avg_norm", "max_norm"))
@@ -148,7 +147,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("VecNorm: sequential fold semantics and edges") {
-    VectorFunctions.register(spark)
     val out = Seq(
       (1L, Some(Seq(3.0, 4.0))),       // 5.0
       (2L, Some(Seq.empty[Double])),   // 0.0

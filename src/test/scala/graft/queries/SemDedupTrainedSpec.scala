@@ -153,7 +153,6 @@ class SemDedupTrainedSpec extends SparkTestBase {
     // increment shuffles (same pin as the corner face in LayoutSpec)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      graft.functions.VectorFunctions.register(spark)
       val split = 250L
       val guarded = SimilarityQueries.semDedupGuard(
         spark.read.parquet(s"$sf0001/embeddings.parquet")

@@ -17,7 +17,6 @@ class LayoutCurveSpec extends SparkTestBase {
 
   test("Hilbert-clustered files bound per-file spans on both dimensions; " +
       "a single-column sort does not") {
-    graft.functions.HilbertFunctions.register(spark)
     val o = Tables.table(spark, sf0001, "orders")
       .select($"o_custkey",
         datediff(to_date($"o_orderdate"),

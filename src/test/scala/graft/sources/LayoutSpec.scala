@@ -71,7 +71,6 @@ class LayoutSpec extends SparkTestBase {
     // incoming batch — while the corpus-scale history reads in place.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      graft.functions.VectorFunctions.register(spark)
       val assigned = graft.queries.SimilarityQueries.semAssign(
         graft.queries.SimilarityQueries.semDedupGuard(
           Tables.table(spark, sf0001, "embeddings")

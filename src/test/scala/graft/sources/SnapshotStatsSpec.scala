@@ -593,9 +593,14 @@ class SnapshotStatsSpec extends SparkTestBase {
     val root = freshRoot()
     SnapshotStore.init(spark, root, baseRows, "pt")
     val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // released together, so every evolve reads the same base: a thread
+    // still starting after the winner committed would evolve the NEXT
+    // version, a second legitimate win rather than a lost race
+    val go = new java.util.concurrent.CountDownLatch(1)
     val threads = (0 until 16).map { i =>
       new Thread(() =>
         try {
+          go.await()
           SnapshotStore.evolve(spark, root,
             Seq(StructField(s"col_$i", IntegerType)))
           results.add(s"win-$i")
@@ -603,7 +608,7 @@ class SnapshotStatsSpec extends SparkTestBase {
           case _: ConcurrentCommitException => results.add(s"refused-$i")
         })
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
     import scala.jdk.CollectionConverters._
     val wins = results.asScala.toSeq.filter(_.startsWith("win"))
     assert(wins.size === 1, s"evolve race: $wins")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.metrics.source.CodegenMetrics
 
@@ -20,10 +19,7 @@ object CodegenProbe {
     // compilation through the REAL query lineage
     if (args.headOption.contains("query")) { queryMode(args(1)); return }
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.get()
     import spark.implicits._
 
     def compiles: Long =
@@ -64,14 +60,7 @@ object CodegenProbe {
   }
 
   private def queryMode(dir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.get()
     def compiles: Long = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
     def compileMs: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for (run <- 1 to 3) {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Debug tool: per-Spark-job time breakdown of one query —
   * `Test/runMain graft.tools.JobProfile <queryName> [sfDir]`.
@@ -15,18 +14,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_index_snapshot_lifecycle")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get()
     val starts =
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug tool: print a query's executed plan (truncated lines) —
   * `Test/runMain graft.tools.PlanDump <queryName> [sfDir]`. Exists
   * because the sbt console can't execute queries whose construction
@@ -11,10 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_emb_pq_codes")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.get()
     val df = graft.SparkEntry.queries(name)(spark, dir)
     df.collect() // finalize AQE so WholeStageCodegen markers appear
     println("=== PLAN " + name)

@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-19 deliverable tool: write `.explain("formatted")` output of
   * queries to `plans/r19/<query>_<suffix>.txt` —
   * `Test/runMain graft.tools.PlanSnap <suffix> <q1> [q2 ...]`.
-  * Bench-identical session confs (32 cpus unless SPARK_GRAFT_CPUS);
+  * Bench-identical session ([[graft.Session.get]]);
   * the plan is the AQE-finalized executed plan after running the
   * query once, matching what the bench actually executes. */
 object PlanSnap {
@@ -14,18 +12,7 @@ object PlanSnap {
     val suffix = args.head
     val names = args.tail.toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get()
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r20")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
